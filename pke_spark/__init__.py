@@ -10,7 +10,7 @@ Layout
                    (repo, path, commit, lang, content) input shape + loaders
 - ``ops``        : query operators (BM25, tfidf, firstphrases, kpminer,
                    candidate generation, dedup, similarity, text stats)
-- ``index``      : inverted-index build (delta+varint posting blocks,
+- ``index``      : inverted-index build (delta + varint/PForDelta posting blocks,
                    block-max stats, salted merge, checkpoint/resume) and
                    Block-Max WAND top-k
 - ``session``    : SparkSession factory

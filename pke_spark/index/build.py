@@ -45,7 +45,6 @@ import os
 import time
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
@@ -323,51 +322,25 @@ def read_manifest(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(f"{index_dir}/manifest")
 
 
-def _varint_each(values) -> list[bytes]:
-    """Per-value single-value TAGGED varint streams for an array (one
-    vectorized encode, then C-level slicing + tag prefix) — the df==1
-    fast path's equivalent of ``codec.encode_stream`` per value (a
-    1-value stream is always cheapest as varint)."""
-    import numpy as np
-    v = np.asarray(values, dtype=np.uint64)
-    buf = codec.varint_encode(v)
-    nb = np.ones(len(v), dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nb += (tmp > 0)
-        tmp >>= np.uint64(7)
-    offs = np.zeros(len(v) + 1, dtype=np.int64)
-    np.cumsum(nb, out=offs[1:])
-    tag = bytes([codec.TAG_VARINT])
-    return [tag + buf[offs[i]:offs[i + 1]] for i in range(len(v))]
-
-
-def _arrow_block_type():
-    import pyarrow as pa
-    return pa.list_(pa.struct([
-        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-        ("n", pa.int32()), ("max_tf", pa.int32()),
-        ("docs", pa.binary()), ("tfs", pa.binary()), ("dls", pa.binary())]))
+# rows per codec call in _encode_partition: the segmented encoder holds
+# a few int64 temporaries per stream value (3 streams per posting), so
+# this keeps a call's working set near 100 MB whatever the chunk size
+ENCODE_SLICE_ROWS = 1 << 19
 
 
 def _encode_partition(batch_iter, block_size: int):
     """mapInArrow over (term, shard)-hash-partitioned, sorted input:
-    encode each group's postings into varint blocks.
+    encode each (term, shard) group's postings into blocks.
 
-    Arrow-native on purpose (membw design, VERDICT r2 item 1): the old
-    mapInPandas pass materialized every posting row's term as a Python
-    str (tens of millions of object allocations per partition) and
-    re-sorted data the JVM had already sorted. Here terms stay in Arrow
-    buffers — ``dictionary_encode`` (C++) yields int codes for run
-    detection, the output term column is built by ``take`` on the
-    dictionary, and the upstream sortWithinPartitions order is verified
-    (cheap vectorized check) instead of re-derived. Python objects are
-    only created at vocab granularity (block structs), not posting
-    granularity.
-
-    Real corpora are long-tail: most terms have df == 1. Those are
-    encoded in one vectorized pass (empty gap stream + per-value varint
-    slices); only multi-posting groups take the per-group loop.
+    One batch is one call of the segmented codec: run detection is a
+    vectorized compare over dictionary codes (``dictionary_encode`` in
+    C++; terms stay in Arrow buffers, the output term column is a
+    ``take`` on the dictionary), and ``codec.encode_block_list`` cuts
+    every group into blocks, chooses and encodes every value stream in
+    one pass and returns the ``blocks`` column as Arrow arrays. No
+    Python object is created per term, block or posting. The upstream
+    sortWithinPartitions order is verified (cheap vectorized check)
+    instead of re-derived.
 
     A (term, shard) group split across Arrow batches yields one output
     row per fragment; fragments are non-overlapping and doc-ordered
@@ -377,7 +350,6 @@ def _encode_partition(batch_iter, block_size: int):
     import numpy as np
     import pyarrow as pa
 
-    block_t = _arrow_block_type()
     for batch in batch_iter:
         if batch.num_rows == 0:
             continue
@@ -397,33 +369,104 @@ def _encode_partition(batch_iter, block_size: int):
             raise RuntimeError("encode input not sorted by (term, shard, "
                               "doc_id) — upstream sortWithinPartitions "
                               "missing?")
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(codes))
-        sizes = ends - starts
+        go = np.append(np.flatnonzero(change), len(codes))
+        # slices of whole groups, ~ENCODE_SLICE_ROWS rows each, bound
+        # the codec's per-value temporaries
+        cuts = np.unique(np.append(np.searchsorted(
+            go, np.arange(0, len(codes), ENCODE_SLICE_ROWS)), len(go) - 1))
+        for g0, g1 in zip(cuts[:-1], cuts[1:]):
+            r0, r1 = go[g0], go[g1]
+            yield _postings_batch(
+                enc.dictionary.take(pa.array(codes[go[g0:g1]])),
+                shard[go[g0:g1]], go[g0:g1 + 1] - r0, doc[r0:r1],
+                tf[r0:r1], dl[r0:r1], block_size)
 
-        single = sizes == 1
-        n_runs = len(starts)
-        blocks_py: list = [None] * n_runs
-        s_pos = np.flatnonzero(single)
-        s_idx = starts[single]
-        s_tf_b = _varint_each(tf[s_idx])
-        s_dl_b = _varint_each(dl[s_idx])
-        for p, i, tb, db in zip(s_pos, s_idx, s_tf_b, s_dl_b):
-            blocks_py[p] = [{"first_doc": int(doc[i]), "last_doc": int(doc[i]),
-                             "n": 1, "max_tf": int(tf[i]),
-                             "docs": b"", "tfs": tb, "dls": db}]
-        for p in np.flatnonzero(~single):
-            s, e = starts[p], ends[p]
-            blocks_py[p] = codec.encode_blocks(doc[s:e], tf[s:e], dl[s:e],
-                                               block_size)
-        cf = np.add.reduceat(tf, starts)
-        yield pa.RecordBatch.from_arrays([
-            enc.dictionary.take(pa.array(codes[starts])),
-            pa.array(shard[starts].astype(np.int32), pa.int32()),
-            pa.array(sizes.astype(np.int64), pa.int64()),
-            pa.array(cf.astype(np.int64), pa.int64()),
-            pa.array(blocks_py, type=block_t),
-        ], names=["term", "shard", "df", "cf", "blocks"])
+
+def _postings_batch(terms, shard, group_offsets, doc, tf, dl,
+                    block_size: int):
+    """POSTINGS_SCHEMA record batch for doc-sorted posting groups."""
+    import numpy as np
+    import pyarrow as pa
+    sizes = np.diff(group_offsets)
+    cf = (np.add.reduceat(tf, group_offsets[:-1]) if len(sizes)
+          else np.empty(0, np.int64))
+    return pa.RecordBatch.from_arrays([
+        terms,
+        pa.array(np.asarray(shard).astype(np.int32), pa.int32()),
+        pa.array(sizes.astype(np.int64), pa.int64()),
+        pa.array(cf.astype(np.int64), pa.int64()),
+        codec.encode_block_list(group_offsets, doc, tf, dl, block_size),
+    ], names=["term", "shard", "df", "cf", "blocks"])
+
+
+def _merge_groups(batch, names: list[str], *, by_shard: bool,
+                  max_merge_docs: int | None = None):
+    """Grouping step of the fragment merges (postings and positions).
+    Rows of one term — and shard, when ``by_shard`` — form a group;
+    with ``max_merge_docs``, groups of a single row or above that many
+    postings pass through unmerged (fragments are valid additive rows).
+    Returns None for an empty batch, else (pass-through batch or None,
+    indices of the rows to merge, group id per row, first row of each
+    merged group in ascending group id)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if batch.num_rows == 0:
+        return None
+    codes = batch.column("term").dictionary_encode().indices.to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    shard = batch.column("shard").to_numpy(zero_copy_only=False)
+    key = codes * (int(shard.max()) + 1) + shard if by_shard else codes
+    _u, gid, g_rows = np.unique(key, return_inverse=True,
+                                return_counts=True)
+    merge = np.ones(batch.num_rows, dtype=bool)
+    if max_merge_docs is not None:
+        df = batch.column("df").to_numpy(zero_copy_only=False)
+        g_df = np.bincount(gid, weights=df, minlength=len(g_rows))
+        merge = ((g_rows > 1) & (g_df <= max_merge_docs))[gid]
+    rows = np.flatnonzero(merge)
+    keep = None
+    if len(rows) < batch.num_rows:
+        keep = pa.RecordBatch.from_arrays(
+            [batch.column(c) for c in names], names=names
+        ).filter(pa.array(~merge))
+    first_row = rows[np.unique(gid[rows], return_index=True)[1]]
+    return keep, rows, gid, first_row
+
+
+def _merge_fragments(batch_iter, block_size: int, *, by_shard: bool,
+                     max_merge_docs: int | None = None):
+    """mapInArrow merge of posting fragments: within each Arrow batch,
+    the rows of a group (``_merge_groups``) become one doc-sorted row.
+    Every fragment to merge is decoded by ONE ``codec.decode_blocks``
+    call, the postings are ordered by one lexsort on (group, doc), and
+    the merged lists are re-encoded by one ``codec.encode_block_list``
+    call. Output shard is the group's shard, or 0 when merging across
+    shards."""
+    import numpy as np
+    import pyarrow as pa
+
+    for batch in batch_iter:
+        plan = _merge_groups(batch, ["term", "shard", "df", "cf", "blocks"],
+                             by_shard=by_shard, max_merge_docs=max_merge_docs)
+        if plan is None:
+            continue
+        keep, rows, gid, first_row = plan
+        if keep is not None:
+            yield keep
+        if not len(rows):
+            continue
+        blocks = batch.column("blocks").take(pa.array(rows))
+        docs, tfs, dls = codec.decode_blocks(blocks.flatten())
+        row_of = np.repeat(gid[rows], codec.list_row_counts(blocks))
+        order = np.lexsort((docs, row_of))
+        starts = np.flatnonzero(np.diff(row_of[order], prepend=-1))
+        shard = (batch.column("shard").to_numpy(zero_copy_only=False)
+                 [first_row] if by_shard else np.zeros(len(first_row)))
+        yield _postings_batch(
+            batch.column("term").take(pa.array(first_row)), shard,
+            np.append(starts, len(order)), docs[order], tfs[order],
+            dls[order], block_size)
 
 
 def build_index(docs: DataFrame, index_dir: str, *,
@@ -815,7 +858,7 @@ def _encode_runs(batch_iter, block_size: int, remap_bc=None):
     each task accumulates its segment rows into bounded chunks, sorts a
     chunk by (term, doc) in Arrow (C++), and block-encodes it into
     partial runs via _encode_partition. What later crosses the B2
-    shuffle is delta+varint COMPRESSED runs with one term string per
+    shuffle is block-COMPRESSED runs with one term string per
     fragment — not one row per posting — which is the memory-bandwidth
     design cut of VERDICT r2 item 1 (at 200k docs: ~240 MB of raw
     shuffle rows became ~10 MB of runs).
@@ -865,32 +908,6 @@ def _encode_runs(batch_iter, block_size: int, remap_bc=None):
             buf, rows = [], 0
     if buf:
         yield from flush(buf)
-
-
-def _merge_runs(pdf_iter, block_size: int, max_merge_docs: int):
-    """Phase B2: bounded-fan-in k-way merge of partial runs per
-    (term, shard) — decode fragments, merge_sorted_runs, re-encode.
-    Single-fragment groups pass through untouched (no decode cost for
-    the long tail); groups above ``max_merge_docs`` also pass through
-    (fragments are themselves valid additive postings rows, so a
-    10^12-scale mega-term never has to fit one task — compact() can
-    merge it later with its own bound)."""
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        rows = []
-        for (term, shard), g in pdf.groupby(["term", "shard"], sort=False):
-            if len(g) == 1 or int(g["df"].sum()) > max_merge_docs:
-                rows.extend(
-                    (term, int(shard), int(r.df), int(r.cf), r.blocks)
-                    for r in g.itertuples())
-                continue
-            runs = [codec.decode_blocks(b) for b in g["blocks"]]
-            docs, tfs, dls = codec.merge_sorted_runs(runs)
-            rows.append((term, int(shard), len(docs), int(tfs.sum()),
-                         codec.encode_blocks(docs, tfs, dls, block_size)))
-        yield pd.DataFrame(rows, columns=["term", "shard", "df", "cf",
-                                          "blocks"])
 
 
 def encode_postings(spark: SparkSession, index_dir: str, *,
@@ -1056,9 +1073,9 @@ def encode_postings(spark: SparkSession, index_dir: str, *,
     routed = salted.repartition("term", "shard")
     if merge_runs:
         routed = (routed.sortWithinPartitions("term", "shard")
-                  .mapInPandas(lambda it: _merge_runs(it, block_size,
-                                                      max_merge_docs),
-                               POSTINGS_SCHEMA))
+                  .mapInArrow(lambda it: _merge_fragments(
+                      it, block_size, by_shard=True,
+                      max_merge_docs=max_merge_docs), POSTINGS_SCHEMA))
     routed.write.mode("overwrite").parquet(f"{index_dir}/{out_name}")
     if dl_cached is not None:
         dl_cached.unpersist()
@@ -1070,8 +1087,10 @@ def encode_postings(spark: SparkSession, index_dir: str, *,
 def compact(spark: SparkSession, index_dir: str, *,
             max_merge_docs: int = 5_000_000,
             block_size: int = codec.BLOCK_SIZE) -> None:
-    """Hierarchical bounded-fan-in merge of hot-term shards: decode the
-    <= n_salts sorted runs per term, k-way merge, re-encode. Terms whose
+    """Hierarchical bounded-fan-in merge of hot-term shards: a
+    mapInArrow pass (``_merge_fragments``) decodes every fragment of an
+    Arrow batch at once, merges each term's runs by one lexsort and
+    re-encodes all merged lists in one codec call. Terms whose
     total df exceeds ``max_merge_docs`` stay sharded (a 10^12-scale 'def'
     never needs to live in one task). The swap is crash-safe: the new
     directory is fully written, then the POSTINGS_CURRENT pointer flips
@@ -1083,21 +1102,11 @@ def compact(spark: SparkSession, index_dir: str, *,
                         (F.col("df_total") <= max_merge_docs)).select("term")
     keep = p.join(F.broadcast(todo), "term", "left_anti")
 
-    def _merge(pdf_iter):
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for term, g in pdf.groupby("term", sort=False):
-                runs = [codec.decode_blocks(b) for b in g["blocks"]]
-                docs, tfs, dls = codec.merge_sorted_runs(runs)
-                out.append((term, 0, len(docs), int(tfs.sum()),
-                            codec.encode_blocks(docs, tfs, dls, block_size)))
-            yield pd.DataFrame(out, columns=["term", "shard", "df", "cf", "blocks"])
-
     merged = (p.join(F.broadcast(todo), "term")
               .repartition("term")
-              .mapInPandas(_merge, POSTINGS_SCHEMA))
+              .mapInArrow(lambda it: _merge_fragments(it, block_size,
+                                                      by_shard=False),
+                          POSTINGS_SCHEMA))
     new_name = f"postings_{uuid.uuid4().hex[:12]}"
     merged.unionByName(keep).write.mode("overwrite") \
         .parquet(f"{index_dir}/{new_name}")
@@ -1242,19 +1251,26 @@ class IndexReader:
             from .delete import keep_mask
             inlist = ", ".join("'" + t.replace("'", "''") + "'"
                                for t in missing)
-            rows = self._duckdb().execute(
+            import numpy as np
+            tbl = self._duckdb().execute(
                 f"SELECT term, blocks FROM "
                 f"read_parquet('{self.postings_dir}/*.parquet') "
-                f"WHERE term IN ({inlist})").fetchall()
-            got: dict[str, list] = {t: [] for t in missing}
-            for term, blocks in rows:
-                got[term].append(codec.decode_blocks(blocks))
-            import numpy as np
+                f"WHERE term IN ({inlist})").fetch_arrow_table()
+            # every fetched fragment's blocks in ONE segmented decode,
+            # then each term gathers its fragments' slices in row order
+            blocks = tbl.column("blocks").combine_chunks()
+            docs, tfs, dls = codec.decode_blocks(blocks.flatten())
+            counts = codec.list_row_counts(blocks)
+            bounds = np.zeros(len(counts) + 1, dtype=np.int64)
+            np.cumsum(counts, out=bounds[1:])
+            frags: dict[str, list[int]] = {}
+            for i, t in enumerate(tbl.column("term").to_pylist()):
+                frags.setdefault(t, []).append(i)
             for t in missing:
-                if got[t]:
-                    d = np.concatenate([g[0] for g in got[t]])
-                    tf = np.concatenate([g[1] for g in got[t]])
-                    dl = np.concatenate([g[2] for g in got[t]])
+                if t in frags:
+                    i = np.asarray(frags[t])
+                    sl = codec.ranges(bounds[i], counts[i])
+                    d, tf, dl = docs[sl], tfs[sl], dls[sl]
                     if self._tomb.size:
                         m = keep_mask(d, self._tomb)
                         d, tf, dl = d[m], tf[m], dl[m]

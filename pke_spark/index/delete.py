@@ -63,8 +63,8 @@ from pyspark.sql import functions as F
 
 from . import codec
 from ..rows import rows_df
-from .build import (POSTINGS_SCHEMA, _append_manifest, docmap_path,
-                    postings_path, swap_postings, write_stats)
+from .build import (POSTINGS_SCHEMA, _append_manifest, _postings_batch,
+                    docmap_path, postings_path, swap_postings, write_stats)
 
 TOMBSTONE_DIR = "tombstones"
 
@@ -256,49 +256,60 @@ def purge_deleted(spark: SparkSession, index_dir: str, *,
     cur = postings_path(index_dir)
     p = spark.read.parquet(cur)
 
-    def _purge(pdf_iter):
+    def _purge(batch_iter):
+        import pyarrow as pa
         t = bc.value
-        for pdf in pdf_iter:
-            rows = []
-            for r in pdf.itertuples():
-                docs, tfs, dls = codec.decode_blocks(r.blocks)
-                keep = keep_mask(docs, t)
-                if keep.all():
-                    rows.append((r.term, int(r.shard), int(r.df),
-                                 int(r.cf), r.blocks))
-                elif keep.any():
-                    d, tf, dl = docs[keep], tfs[keep], dls[keep]
-                    rows.append((r.term, int(r.shard), len(d),
-                                 int(tf.sum()),
-                                 codec.encode_blocks(d, tf, dl,
-                                                     block_size)))
-                # else: the whole row was deleted docs — drop it
-            yield pd.DataFrame(rows, columns=["term", "shard", "df",
-                                              "cf", "blocks"])
+        names = ["term", "shard", "df", "cf", "blocks"]
+        for batch in batch_iter:
+            if batch.num_rows == 0:
+                continue
+            # every row's blocks in one segmented decode; rows without
+            # a deleted doc pass through byte-identical, rows with only
+            # deleted docs are dropped, the rest re-encode in one call
+            blocks = batch.column("blocks")
+            docs, tfs, dls = codec.decode_blocks(blocks.flatten())
+            counts = codec.list_row_counts(blocks)
+            keep = keep_mask(docs, t)
+            row_of = np.repeat(np.arange(batch.num_rows), counts)
+            kept = np.bincount(row_of[keep], minlength=batch.num_rows)
+            whole = kept == counts
+            if whole.any():
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(c) for c in names], names=names
+                ).filter(pa.array(whole))
+            part = np.flatnonzero((kept > 0) & ~whole)
+            if len(part):
+                sel = keep & np.isin(row_of, part)
+                yield _postings_batch(
+                    batch.column("term").take(pa.array(part)),
+                    batch.column("shard").to_numpy(
+                        zero_copy_only=False)[part],
+                    codec.excl_cumsum(kept[part]), docs[sel], tfs[sel],
+                    dls[sel], block_size)
 
     new_name = f"postings_{uuid.uuid4().hex[:12]}"
     new_dir = f"{index_dir}/{new_name}"
     # row-wise rewrite: no repartition — the purge is embarrassingly
     # parallel per posting row, so the corpus-sized blocks never shuffle
-    p.mapInPandas(_purge, POSTINGS_SCHEMA) \
+    p.mapInArrow(_purge, POSTINGS_SCHEMA) \
         .write.mode("overwrite").parquet(new_dir)
 
     # exact stats from the surviving postings (self-healing: no delta
     # arithmetic against possibly-stale old stats). Decode only the
     # (doc, dl) pairs; map-side dedup bounds the shuffle at
     # ~n_live_docs rows.
-    def _doc_dl(pdf_iter):
-        for pdf in pdf_iter:
-            seen: dict[int, int] = {}
-            for blocks in pdf["blocks"]:
-                docs, _, dls = codec.decode_blocks(blocks)
-                for d, dl in zip(docs.tolist(), dls.tolist()):
-                    seen[d] = dl
-            yield pd.DataFrame({"doc_id": list(seen.keys()),
-                                "dl": list(seen.values())})
+    def _doc_dl(batch_iter):
+        import pyarrow as pa
+        for batch in batch_iter:
+            docs, _, dls = codec.decode_blocks(
+                batch.column("blocks").flatten())
+            d, first = np.unique(docs, return_index=True)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(d, pa.int64()), pa.array(dls[first], pa.int64())],
+                names=["doc_id", "dl"])
 
     agg = (spark.read.parquet(new_dir).select("blocks")
-           .mapInPandas(_doc_dl, "doc_id long, dl long")
+           .mapInArrow(_doc_dl, "doc_id long, dl long")
            .groupBy("doc_id").agg(F.first("dl").alias("dl"))
            .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
            .first())

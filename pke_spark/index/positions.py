@@ -34,8 +34,11 @@ Position encoding per block: positions are concatenated across the
 block's docs in doc order; within a doc they are strictly increasing,
 so they are delta-encoded (first position of each doc absolute, the
 rest gaps) and the per-doc boundaries are implied by the block's tf
-stream (doc i contributes exactly tf_i values). Decode is a segmented
-cumulative sum — fully vectorized, no per-position Python.
+stream (doc i contributes exactly tf_i values). Every block of an
+Arrow batch is encoded by one ``codec.encode_streams`` call
+(``encode_pos_block_list``) and decoded by one segmented decode
+(``decode_pos_blocks``), whose positions come back by a segmented
+cumulative sum — no Python object per block, doc or position.
 
 Query semantics are defined (and oracle-gated) in ``pke_spark.ops
 .phrase``; the indexed scorers here decode only the queried terms'
@@ -104,56 +107,71 @@ def swap_positions(index_dir: str, new_name: str) -> None:
 
 # ------------------------------------------------------------------ build
 
-def _encode_pos_blocks(doc: np.ndarray, tf: np.ndarray,
-                       flat_pos: np.ndarray, block_size: int) -> list[dict]:
-    """One term's postings (docs ascending, per-doc position counts tf,
-    positions concatenated in doc order) -> block dicts."""
-    u = codec.to_u64(doc)
-    t = tf.astype(np.uint64)
-    bounds = np.zeros(len(doc) + 1, dtype=np.int64)
-    np.cumsum(tf, out=bounds[1:])
-    blocks = []
-    for s in range(0, len(u), block_size):
-        e = min(s + block_size, len(u))
-        seg = u[s:e]
-        gaps = np.empty(e - s - 1, dtype=np.uint64)
-        np.subtract(seg[1:], seg[:-1], out=gaps)
-        p = flat_pos[bounds[s]:bounds[e]].astype(np.int64)
-        delta = p.copy()
-        delta[1:] -= p[:-1]
-        starts = bounds[s:e] - bounds[s]
-        delta[starts] = p[starts]  # per-doc first position absolute
-        blocks.append({
-            "first_doc": int(doc[s]), "last_doc": int(doc[e - 1]),
-            "n": int(e - s),
-            "docs": codec.encode_stream(gaps),
-            "tfs": codec.encode_stream(t[s:e]),
-            "poss": codec.encode_stream(delta.astype(np.uint64)),
-        })
-    return blocks
+POS_FIELDS = ("first_doc", "last_doc", "n", "docs", "tfs", "poss")
 
 
-def _decode_pos_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """block -> (doc_ids asc, tfs, positions flat in doc order)."""
-    get = (block.get if isinstance(block, dict)
-           else lambda k: getattr(block, k))
-    n = int(get("n"))
-    gaps = codec.decode_stream(bytes(get("docs")), n - 1)
-    u = np.empty(n, dtype=np.uint64)
-    u[0] = codec.to_u64(np.array([get("first_doc")], dtype=np.int64))[0]
-    if len(gaps):
-        np.cumsum(gaps, out=u[1:])
-        u[1:] += u[0]
-    tfs = codec.decode_stream(bytes(get("tfs")), n).astype(np.int64)
-    npos = int(tfs.sum())
-    delta = codec.decode_stream(bytes(get("poss")), npos).astype(np.int64)
-    # segmented cumsum: running sum, re-anchored at each doc's first
-    # position (which was stored absolute)
-    c = np.cumsum(delta)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(tfs[:-1], out=starts[1:])
-    pos = c - np.repeat(c[starts] - delta[starts], tfs)
-    return codec.from_u64(u), tfs, pos
+def encode_pos_block_list(group_offsets: np.ndarray, doc: np.ndarray,
+                          tf: np.ndarray, pos: np.ndarray,
+                          block_size: int):
+    """Positional posting groups -> the sidecar's ``blocks`` column
+    (Arrow ``list<struct<first_doc, last_doc, n, docs, tfs, poss>>``,
+    one list per group), every block of the batch encoded by one
+    ``codec.encode_streams`` call. Docs ascend within each group
+    (``group_offsets`` tile the postings); posting ``i`` owns ``tf[i]``
+    positions of the flat, doc-ordered ``pos``."""
+    import pyarrow as pa
+    doc = np.asarray(doc, dtype=np.int64)
+    tf = np.asarray(tf, dtype=np.int64)
+    p = np.asarray(pos, dtype=np.int64)
+    bstart, bend, list_offs = codec.block_layout(group_offsets, block_size)
+    bounds = codec.excl_cumsum(tf)
+    delta = p.copy()
+    delta[1:] -= p[:-1]
+    delta[bounds[:-1]] = p[bounds[:-1]]  # per-doc first position absolute
+    bnd = np.append(bstart, len(doc))
+    docs_b, tfs_b, poss_b = codec.encode_stream_fields([
+        codec.doc_gaps(doc, bstart, bend), (tf, bnd),
+        (delta.astype(np.uint64), bounds[bnd])])
+    struct = pa.StructArray.from_arrays([
+        pa.array(doc[bstart], pa.int64()),
+        pa.array(doc[bend - 1], pa.int64()),
+        pa.array((bend - bstart).astype(np.int32), pa.int32()),
+        docs_b, tfs_b, poss_b], names=list(POS_FIELDS))
+    return pa.ListArray.from_arrays(
+        pa.array(list_offs.astype(np.int32), pa.int32()), struct)
+
+
+def decode_pos_blocks(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Any number of positional blocks (Arrow array or a sequence of
+    block dicts/Rows) -> (doc_ids, tfs, positions flat in doc order),
+    concatenated in block order by one segmented decode per stream
+    family. Positions are re-anchored by a segmented cumulative sum at
+    each doc's first (absolute) position — no per-position Python."""
+    if blocks is None or len(blocks) == 0:
+        z = np.empty(0, np.int64)
+        return z, z, z
+    c = codec.block_columns(blocks, ("first_doc", "n", "docs", "tfs",
+                                     "poss"))
+    n = c["n"]
+    docs = codec.decode_doc_ids(c["first_doc"], n, c["docs"])
+    tfs = codec.decode_streams(*c["tfs"], n).astype(np.int64)
+    npos = codec.seg_sum(tfs, codec.excl_cumsum(n))
+    delta = codec.decode_streams(*c["poss"], npos).astype(np.int64)
+    cs = np.cumsum(delta)
+    starts = codec.excl_cumsum(tfs)[:-1]
+    return docs, tfs, cs - np.repeat(cs[starts] - delta[starts], tfs)
+
+
+def _positions_batch(terms, shard, group_offsets, doc, tf, pos,
+                     block_size: int):
+    """POSITIONS_SCHEMA record batch for doc-sorted positional groups."""
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays([
+        terms.cast(pa.string()),
+        pa.array(np.asarray(shard).astype(np.int32), pa.int32()),
+        pa.array(np.diff(group_offsets).astype(np.int64), pa.int64()),
+        encode_pos_block_list(group_offsets, doc, tf, pos, block_size),
+    ], names=["term", "shard", "df", "blocks"])
 
 
 def _fused_positions_pipe(batch_iter, block_size: int, profile: str):
@@ -161,8 +179,9 @@ def _fused_positions_pipe(batch_iter, block_size: int, profile: str):
 
     tokenize (pyarrow RE2 kernels, the Arrow lockstep impl) -> per-token
     1-based position within its doc -> stable lexsort to (term, doc)
-    runs (positions stay ascending inside each run) -> block encode.
-    Python objects only at fragment/block granularity, never per token.
+    runs (positions stay ascending inside each run) -> one
+    ``encode_pos_block_list`` call per batch. No Python object per
+    token, posting, block or term.
     """
     import pyarrow as pa
     from ..tokenizer import arrow_tokenize_batch
@@ -199,41 +218,17 @@ def _fused_positions_pipe(batch_iter, block_size: int, profile: str):
         run[0] = True
         run[1:] = (tc_s[1:] != tc_s[:-1]) | (doc_s[1:] != doc_s[:-1])
         rstarts = np.flatnonzero(run)
-        rends = np.append(rstarts[1:], len(order))
-        tf_run = (rends - rstarts).astype(np.int64)
+        tf_run = np.diff(np.append(rstarts, len(order)))
         term_run = tc_s[rstarts]
-        doc_run = doc_s[rstarts]
         # term fragments: consecutive runs sharing a term code
         tchange = np.empty(len(rstarts), dtype=bool)
         tchange[0] = True
         tchange[1:] = term_run[1:] != term_run[:-1]
         fstarts = np.flatnonzero(tchange)
-        fends = np.append(fstarts[1:], len(rstarts))
-        terms_py = enc.dictionary.take(
-            pa.array(term_run[fstarts])).to_pylist()
-        frags_terms, frags_df, frags_blocks = [], [], []
-        for term, fs, fe in zip(terms_py, fstarts, fends):
-            d = doc_run[fs:fe]
-            t = tf_run[fs:fe]
-            p = pos_s[rstarts[fs]:rends[fe - 1]]
-            frags_terms.append(term)
-            frags_df.append(int(fe - fs))
-            frags_blocks.append(_encode_pos_blocks(d, t, p, block_size))
-        yield pa.RecordBatch.from_arrays([
-            pa.array(frags_terms, pa.string()),
-            pa.array([0] * len(frags_terms), pa.int32()),
-            pa.array(frags_df, pa.int64()),
-            pa.array(frags_blocks, type=_arrow_pos_block_type()),
-        ], names=["term", "shard", "df", "blocks"])
-
-
-def _arrow_pos_block_type():
-    import pyarrow as pa
-    return pa.list_(pa.struct([
-        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-        ("n", pa.int32()),
-        ("docs", pa.binary()), ("tfs", pa.binary()),
-        ("poss", pa.binary())]))
+        yield _positions_batch(
+            enc.dictionary.take(pa.array(term_run[fstarts])),
+            np.zeros(len(fstarts)), np.append(fstarts, len(rstarts)),
+            doc_s[rstarts], tf_run, pos_s, block_size)
 
 
 def build_positions(docs: DataFrame, index_dir: str, *,
@@ -294,7 +289,9 @@ def compact_positions(spark: SparkSession, index_dir: str, *,
     """Offline sidecar compaction (the LSM merge step, as in
     ``build.compact``): co-locate each (term, shard)'s fragments and
     merge them into one doc-sorted fragment, so a long-appended sidecar
-    reads like a fresh build. Groups whose merged df would exceed
+    reads like a fresh build. Per Arrow batch: one decode of every
+    fragment to merge, one lexsort by (group, doc) that carries each
+    doc's positions along, one encode. Groups whose merged df would exceed
     ``max_merge_docs`` pass through unmerged (fragments stay valid —
     every consumer treats rows additively). New versioned dir + atomic
     pointer swap; crash-safe like every other rewrite in this engine."""
@@ -302,49 +299,38 @@ def compact_positions(spark: SparkSession, index_dir: str, *,
     new_name = f"positions_{uuid.uuid4().hex[:12]}"
     out = f"{index_dir}/{new_name}"
 
-    def merge(pdf_iter):
-        import pandas as pd
-        for pdf in pdf_iter:
-            rows = {"term": [], "shard": [], "df": [], "blocks": []}
-            for (term, shard), g in pdf.groupby(["term", "shard"],
-                                                sort=False):
-                total = int(g["df"].sum())
-                if len(g) == 1 or total > max_merge_docs:
-                    for _, r in g.iterrows():
-                        rows["term"].append(term)
-                        rows["shard"].append(shard)
-                        rows["df"].append(int(r["df"]))
-                        rows["blocks"].append(r["blocks"])
-                    continue
-                ds, ts, ps = [], [], []
-                for blocks in g["blocks"]:
-                    for b in blocks:
-                        d, tf, p = _decode_pos_block(b)
-                        ds.append(d)
-                        ts.append(tf)
-                        ps.append(p)
-                d = np.concatenate(ds)
-                tf = np.concatenate(ts)
-                # positions must follow their doc through the sort:
-                # reorder the flat stream by per-doc slices
-                bounds = np.zeros(len(d) + 1, dtype=np.int64)
-                np.cumsum(tf, out=bounds[1:])
-                p = np.concatenate(ps)
-                order = np.argsort(d, kind="mergesort")
-                p = np.concatenate([p[bounds[i]:bounds[i + 1]]
-                                    for i in order]) if len(order) else p
-                d, tf = d[order], tf[order]
-                rows["term"].append(term)
-                rows["shard"].append(shard)
-                rows["df"].append(int(len(d)))
-                rows["blocks"].append(
-                    _encode_pos_blocks(d, tf, p, block_size))
-            yield pd.DataFrame(rows)
+    def merge(batch_iter):
+        import pyarrow as pa
+        from .build import _merge_groups
+        for batch in batch_iter:
+            plan = _merge_groups(batch, ["term", "shard", "df", "blocks"],
+                                 by_shard=True, max_merge_docs=max_merge_docs)
+            if plan is None:
+                continue
+            keep, rows, gid, first_row = plan
+            if keep is not None:
+                yield keep
+            if not len(rows):
+                continue
+            blocks = batch.column("blocks").take(pa.array(rows))
+            d, tf, p = decode_pos_blocks(blocks.flatten())
+            # postings reorder by (group, doc); each posting's positions
+            # move with it as one slice of the flat stream
+            row_of = np.repeat(gid[rows], codec.list_row_counts(blocks))
+            order = np.lexsort((d, row_of))
+            p = p[codec.ranges(codec.excl_cumsum(tf)[order], tf[order])]
+            starts = np.flatnonzero(np.diff(row_of[order], prepend=-1))
+            yield _positions_batch(
+                batch.column("term").take(pa.array(first_row)),
+                batch.column("shard").to_numpy(
+                    zero_copy_only=False)[first_row],
+                np.append(starts, len(order)), d[order], tf[order], p,
+                block_size)
 
     (spark.read.parquet(cur)
      .repartition("term", "shard")
      .sortWithinPartitions("term", "shard")
-     .mapInPandas(merge, POSITIONS_SCHEMA)
+     .mapInArrow(merge, POSITIONS_SCHEMA)
      .write.mode("overwrite").parquet(out))
     swap_positions(index_dir, new_name)
 
@@ -372,34 +358,41 @@ def term_positions(spark: SparkSession, index_dir: str,
     w_bc = (spark.sparkContext.broadcast(wanted)
             if wanted is not None else None)
 
-    def decode(pdf_iter):
-        import pandas as pd
+    def decode(batch_iter):
+        import pyarrow as pa
         w = w_bc.value if w_bc is not None else None
-        for pdf in pdf_iter:
-            outs = []
-            for term, blocks in zip(pdf["term"], pdf["blocks"]):
-                for b in blocks:
-                    if w is not None:
-                        get = (b.get if isinstance(b, dict)
-                               else lambda k, _b=b: getattr(_b, k))
-                        lo = np.searchsorted(w, int(get("first_doc")))
-                        if lo >= len(w) or w[lo] > int(get("last_doc")):
-                            continue  # no wanted doc in this block
-                    d, tfs, p = _decode_pos_block(b)
-                    if w is not None:
-                        m = np.isin(d, w, assume_unique=True)
-                        if not m.any():
-                            continue
-                        p = p[np.repeat(m, tfs)]  # flat-pos mask first
-                        d, tfs = d[m], tfs[m]
-                    outs.append(pd.DataFrame({
-                        "doc_id": np.repeat(d, tfs),
-                        "pos": p.astype(np.int32),
-                        "term": term}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+        for batch in batch_iter:
+            blocks = batch.column("blocks")
+            flat = blocks.flatten()
+            lo = blocks.offsets.to_numpy().astype(np.int64)
+            row_blk = np.repeat(np.arange(batch.num_rows), np.diff(lo))
+            if w is not None and not len(w):
+                continue
+            if w is not None and len(flat):
+                # skip blocks whose [first_doc, last_doc] range holds
+                # no wanted doc, before decoding anything
+                c = codec.block_columns(flat, ("first_doc", "last_doc"))
+                at = np.minimum(np.searchsorted(w, c["first_doc"]),
+                                len(w) - 1)
+                hit = np.flatnonzero((w[at] >= c["first_doc"])
+                                     & (w[at] <= c["last_doc"]))
+                flat = flat.take(pa.array(hit))
+                row_blk = row_blk[hit]
+            if not len(flat):
+                continue
+            d, tfs, p = decode_pos_blocks(flat)
+            row = np.repeat(row_blk, codec.block_columns(flat, ("n",))["n"])
+            if w is not None:
+                m = np.isin(d, w)
+                p = p[np.repeat(m, tfs)]  # flat-pos mask first
+                d, tfs, row = d[m], tfs[m], row[m]
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.repeat(d, tfs), pa.int64()),
+                pa.array(p.astype(np.int32), pa.int32()),
+                batch.column("term").take(pa.array(np.repeat(row, tfs)))
+                .cast(pa.string())], names=["doc_id", "pos", "term"])
 
-    return frags.mapInPandas(decode, "doc_id long, pos int, term string")
+    return frags.mapInArrow(decode, "doc_id long, pos int, term string")
 
 
 def _exclude(df: DataFrame, exclude_doc_ids) -> DataFrame:

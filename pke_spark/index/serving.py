@@ -773,7 +773,7 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
     per query (queries x postings rows through one shuffle + a
     corpus-sized aggregation). Here the COMPRESSED posting blocks of
     the union of every query's terms are routed once by doc-range
-    bucket — the only payload that moves is the delta+varint blocks,
+    bucket — the only payload that moves is the compressed blocks,
     exactly the index-build's membw discipline — the query set rides a
     broadcast, and each bucket task runs the driver path's own
     posting-set algebra (constrain + sorted-term scoring, the

@@ -89,26 +89,29 @@ def decoded_tc(ix: IndexReader, terms: list[str]) -> DataFrame:
     """(term, doc_id, tf, dl) DataFrame decoded from the queried terms'
     posting blocks (term-pruned parquet scan; tombstones applied in the
     decode pass). doc_id is in POSTING space — ordinals when the index
-    is dense."""
+    is dense. Every block of an Arrow batch is decoded by one segmented
+    decode."""
     post = ix.term_postings(sorted(set(terms)))
     tomb = ix.tombstones()
     tb = ix.spark.sparkContext.broadcast(tomb) if tomb.size else None
 
-    def _decode(pdf_iter):
+    def _decode(batch_iter):
+        import pyarrow as pa
         t = tb.value if tb is not None else None
-        for pdf in pdf_iter:
-            frames = []
-            for _, r in pdf.iterrows():
-                docs, tfs, dls = codec.decode_blocks(r["blocks"])
-                if t is not None:
-                    m = keep_mask(docs, t)
-                    docs, tfs, dls = docs[m], tfs[m], dls[m]
-                frames.append(pd.DataFrame(
-                    {"term": r["term"], "doc_id": docs, "tf": tfs, "dl": dls}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+        for batch in batch_iter:
+            blocks = batch.column("blocks")
+            docs, tfs, dls = codec.decode_blocks(blocks.flatten())
+            row = np.repeat(np.arange(batch.num_rows),
+                            codec.list_row_counts(blocks))
+            if t is not None:
+                m = keep_mask(docs, t)
+                docs, tfs, dls, row = docs[m], tfs[m], dls[m], row[m]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("term").take(pa.array(row)), pa.array(docs),
+                 pa.array(tfs), pa.array(dls)],
+                names=["term", "doc_id", "tf", "dl"])
 
-    return post.select("term", "blocks").mapInPandas(
+    return post.select("term", "blocks").mapInArrow(
         _decode, "term string, doc_id long, tf long, dl long")
 
 
@@ -507,28 +510,7 @@ def bm25_topk_batch(ix: IndexReader, queries: dict[str, list[str]],
                              "query_id string, term string"))
     stats = F.broadcast(rows_df(ix.spark, sorted(dfs.items()),
                                 "term string, df long"))
-    post = ix.term_postings(sorted(dfs))
-
-    tomb = ix.tombstones()
-    tb2 = ix.spark.sparkContext.broadcast(tomb) if tomb.size else None
-
-    def _decode(pdf_iter):
-        t = tb2.value if tb2 is not None else None
-        for pdf in pdf_iter:
-            frames = []
-            for _, r in pdf.iterrows():
-                docs, tfs, dls = codec.decode_blocks(r["blocks"])
-                if t is not None:
-                    m = keep_mask(docs, t)
-                    docs, tfs, dls = docs[m], tfs[m], dls[m]
-                frames.append(pd.DataFrame(
-                    {"term": r["term"], "doc_id": docs,
-                     "tf": tfs, "dl": dls}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    tc = post.select("term", "blocks").mapInPandas(
-        _decode, "term string, doc_id long, tf long, dl long")
+    tc = decoded_tc(ix, list(dfs))
     n, avgdl = float(ix.n_docs), float(ix.avgdl)
     idf = F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))

@@ -62,7 +62,7 @@ def bm25_exprs(k1: float = K1, b: float = B):
 
 
 def corpus_tokens(docs: DataFrame, profile: str = "code") -> DataFrame:
-    """(doc_id, pos, term), materialized ONCE per query via an eager
+    """(doc_id, pos, term), materialized ONCE per query via a lazy
     ``localCheckpoint``. Every corpus-side scorer consumes the token
     table several times in one plan — per-(doc, term) counts, the
     doc-length table, corpus stats, and (for the query language) one

@@ -24,7 +24,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -111,8 +112,9 @@ def main() -> None:
         out["perquery_qps_warm"] = round(n_seq / dt, 1)
     finally:
         shutil.rmtree(ix_dir, ignore_errors=True)
-    json.dump(out, open("/root/repo/benchmarks/batch_querystring.json",
-                        "w"), indent=2)
+    json.dump(out, open(os.path.join(ROOT, "benchmarks",
+                                   "batch_querystring.json"), "w"),
+              indent=2)
     print(json.dumps(out), flush=True)
     spark.stop()
     os._exit(0)

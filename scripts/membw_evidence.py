@@ -6,8 +6,8 @@ shuffle write + shuffle read + memory/disk spill + task input/output,
 plus wall time. Run it from two checkouts (the round-2 pipeline vs the
 round-3 run-merge pipeline) to quantify the membw-share cut:
 
-    PYTHONPATH=/root/repo         python scripts/membw_evidence.py 200000 8 new
-    PYTHONPATH=/root/old_worktree python scripts/membw_evidence.py 200000 8 old
+    python <new checkout>/scripts/membw_evidence.py 200000 8 new
+    python <old checkout>/scripts/membw_evidence.py 200000 8 old
 
 Appends one record per run to benchmarks/membw_evidence.json.
 """
@@ -21,7 +21,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.environ.get("PYTHONPATH", "/root/repo").split(":")[0])
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pke_spark.corpus import synth_corpus, with_doc_ids  # noqa: E402
 from pke_spark.index.build import build_index  # noqa: E402
@@ -75,7 +76,7 @@ def main() -> None:
            **{k: int(tot[k] - base[k]) for k in tot}}
     rec["shuffle_total_mb"] = round(
         (rec["shuffle_write_bytes"] + rec["shuffle_read_bytes"]) / 2**20, 1)
-    path = "/root/repo/benchmarks/membw_evidence.json"
+    path = os.path.join(ROOT, "benchmarks", "membw_evidence.json")
     hist = json.load(open(path)) if os.path.exists(path) else []
     hist.append(rec)
     json.dump(hist, open(path, "w"), indent=2)

@@ -16,9 +16,11 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import os, shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, "@ROOT@")
 from pke_spark.corpus import synth_corpus, with_doc_ids
 from pke_spark.index import build as B
 from pke_spark.session import get_spark
@@ -54,7 +56,7 @@ print("PHASES", t_gen, t_a, t_b)
 shutil.rmtree(ix_dir, ignore_errors=True)
 spark.stop()
 os._exit(0)
-"""
+""".replace("@ROOT@", ROOT)
 
 
 def main() -> None:
@@ -73,7 +75,7 @@ def main() -> None:
                    "phaseA_segments_sec": round(t_a, 2),
                    "phaseB_encode_sec": round(t_b, 2),
                    "build_sec": round(t_a + t_b, 2)}
-            path = "/root/repo/benchmarks/phase_timing.json"
+            path = os.path.join(ROOT, "benchmarks", "phase_timing.json")
             hist = []
             if os.path.exists(path):
                 hist = json.load(open(path))

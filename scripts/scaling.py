@@ -50,9 +50,11 @@ def _cpu_times() -> tuple[int, int]:
 N_LOW = int(os.environ.get("SCALE_N_LOW", "2"))
 N_HIGH = int(os.environ.get("SCALE_N_HIGH", "8"))
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, "@ROOT@")
 from pke_spark.corpus import synth_corpus, with_doc_ids
 from pke_spark.index.build import build_index
 from pke_spark.session import get_spark
@@ -103,7 +105,7 @@ else:
 print("ELAPSED", time.time() - t0)
 shutil.rmtree(ix_dir, ignore_errors=True)
 spark.stop()
-"""
+""".replace("@ROOT@", ROOT)
 
 
 def run_build(cpus: int, n_docs: int) -> tuple[float, float]:
@@ -160,13 +162,13 @@ def main() -> None:
                 + [{"cpus": N_HIGH, "sec": round(t, 2), "steal_pct": round(s, 1)}
                    for t, s in hi],
     }
-    os.makedirs("/root/repo/benchmarks", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "benchmarks"), exist_ok=True)
     fname = ("scaling_direct.json" if os.environ.get("SCALE_DIRECT") == "1"
              else "scaling_teed.json" if os.environ.get("SCALE_TEED") == "1"
              else "scaling_positions.json"
              if os.environ.get("SCALE_POSITIONS") == "1"
              else "scaling.json")
-    with open(f"/root/repo/benchmarks/{fname}", "w") as f:
+    with open(os.path.join(ROOT, "benchmarks", fname), "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out, indent=2))
 

@@ -12,12 +12,15 @@ disabled (and stage metrics must not include other tests' jobs).
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import json, shutil, sys, tempfile, urllib.request
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pke_spark.corpus import synth_corpus, with_doc_ids
 from pke_spark.index.build import build_index, _dir_bytes
 from pke_spark.session import get_spark
@@ -56,7 +59,7 @@ import os; os._exit(0)
 
 
 def test_build_has_single_compressed_shuffle():
-    out = subprocess.run([sys.executable, "-c", CHILD],
+    out = subprocess.run([sys.executable, "-c", CHILD, ROOT],
                          capture_output=True, text=True, timeout=600)
     line = [ln for ln in out.stdout.splitlines()
             if ln.startswith("{")][-1]

@@ -442,6 +442,41 @@ def test_merge_runs_eager_equals_default(corpus, spark, tmp_path):
     assert merged_rows <= frag_rows
 
 
+def test_compacted_rows_equal_scalar_encoding(corpus, spark, tmp_path):
+    """compact() merges a term's fragments in one batched decode, one
+    lexsort and one batched encode; every compacted row must carry
+    exactly the blocks the scalar encoder gives its merged list."""
+    docs, _ = corpus
+    d = str(tmp_path / "ix")
+    build_index(docs, d, n_parts=4, n_salts=4, hot_threshold=50,
+                block_size=32)
+    before = IndexReader(spark, d, cache=False).postings().collect()
+    compact(spark, d, block_size=32)
+    after = IndexReader(spark, d, cache=False).postings().collect()
+    assert len(after) < len(before)
+    merged = 0
+    for r in after:
+        ds, ts, ls = codec.decode_blocks(r.blocks)
+        assert np.all(ds[1:] > ds[:-1])
+        assert r.df == len(ds) and r.cf == int(ts.sum())
+        if r.shard == 0:
+            merged += 1
+        got = [{k: bytes(v) if isinstance(v, bytearray) else v
+                for k, v in b.asDict().items()} for b in r.blocks]
+        assert got == codec.encode_blocks(ds, ts, ls, 32)
+    assert merged > 0
+
+    def postings(rows):
+        got = []
+        for r in rows:
+            ds, ts, ls = codec.decode_blocks(r.blocks)
+            got += [(r.term, int(a), int(b), int(c))
+                    for a, b, c in zip(ds, ts, ls)]
+        return sorted(got)
+
+    assert postings(after) == postings(before)
+
+
 def test_direct_build_equals_default(corpus, spark, tmp_path):
     """build_index_direct (single-pass, no segments) must produce
     byte-equivalent postings content and identical WAND results; a

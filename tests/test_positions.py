@@ -40,10 +40,11 @@ def test_pos_block_roundtrip(doclists, block_size):
     doc = np.cumsum([g for g, _ in doclists]).astype(np.int64) - (1 << 39)
     tf = np.array([len(p) for _, p in doclists], dtype=np.int64)
     flat = np.concatenate([np.sort(p) for _, p in doclists]).astype(np.int64)
-    blocks = PX._encode_pos_blocks(doc, tf, flat, block_size)
+    blocks = PX.encode_pos_block_list(np.array([0, len(doc)]), doc, tf,
+                                      flat, block_size)[0].as_py()
     d_all, t_all, p_all = [], [], []
     for b in blocks:
-        d, t, p = PX._decode_pos_block(b)
+        d, t, p = PX.decode_pos_blocks([b])
         d_all.append(d)
         t_all.append(t)
         p_all.append(p)
@@ -183,6 +184,46 @@ def test_compact_positions_parity_and_merge(spark, sf_sidecar):
             a = PX.phrase_topk_indexed(spark, d, terms, 10).toPandas()
             b = PX.phrase_topk_indexed(spark, d2, terms, 10).toPandas()
             assert a.equals(b), terms
+
+
+def _scalar_pos_blocks(doc, tf, pos, block_size):
+    """Reference positional encoding of one posting list, stream by
+    stream through the scalar ``codec.encode_stream``."""
+    from pke_spark.index import codec
+    bounds = np.concatenate([[0], np.cumsum(tf)])
+    out = []
+    for s in range(0, len(doc), block_size):
+        e = min(s + block_size, len(doc))
+        u = codec.to_u64(doc[s:e])
+        p = pos[bounds[s]:bounds[e]].astype(np.int64)
+        delta = p.copy()
+        delta[1:] -= p[:-1]
+        starts = bounds[s:e] - bounds[s]
+        delta[starts] = p[starts]
+        out.append({"first_doc": int(doc[s]), "last_doc": int(doc[e - 1]),
+                    "n": e - s,
+                    "docs": codec.encode_stream(u[1:] - u[:-1]),
+                    "tfs": codec.encode_stream(tf[s:e]),
+                    "poss": codec.encode_stream(delta.astype(np.uint64))})
+    return out
+
+
+def test_compacted_position_rows_equal_scalar_encoding(spark, sf_sidecar):
+    """Every row compact_positions writes equals the scalar encoding of
+    its merged (doc, tf, positions) list."""
+    d, docs = sf_sidecar
+    with tempfile.TemporaryDirectory(prefix="pos_cmpb_") as d2:
+        PX.build_positions(docs.where("doc_id % 2 = 0"), d2, block_size=16)
+        PX.append_positions(docs.where("doc_id % 2 = 1"), d2, block_size=16)
+        PX.compact_positions(spark, d2, block_size=16)
+        rows = spark.read.parquet(PX.positions_dir(d2)).collect()
+        assert any(len(r.blocks) > 1 for r in rows)
+        for r in rows:
+            doc, tf, pos = PX.decode_pos_blocks(r.blocks)
+            assert r.df == len(doc) and np.all(doc[1:] > doc[:-1])
+            got = [{k: bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                    for k, v in b.asDict().items()} for b in r.blocks]
+            assert got == _scalar_pos_blocks(doc, tf, pos, 16), r.term
 
 
 # -------------------------------------------------------- 5. tombstones
